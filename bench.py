@@ -387,7 +387,10 @@ def main() -> None:
                 # machine and wall times are inflated (see per-entry
                 # cpu_per_wall in query_stats)
                 "loadavg_at_end": [round(x, 2) for x in os.getloadavg()],
+                # host cores, and the cores Spark actually ran on (a
+                # local[N] session or SPARK_GRAFT_CPUS can use fewer)
                 "n_cpus": os.cpu_count(),
+                "spark_cores": spark.sparkContext.defaultParallelism,
                 "queries": timings,
                 "query_stats": stats,
             },

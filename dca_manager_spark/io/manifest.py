@@ -51,7 +51,9 @@ import re
 import threading as _threading
 import uuid
 from pathlib import Path
+from typing import NamedTuple
 
+from pyspark.errors import ParseException
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -2723,6 +2725,19 @@ class ManifestTable:
 # handle-API transactions out, plain `spark.sql` for everything else.
 # Reads stay on the registered VIEW (`register()`), which IS plain
 # `spark.sql`.
+#
+# The grammar is Spark's own: the session's SQL parser turns the text
+# into an unresolved logical plan, and the front-end dispatches on the
+# plan's class (InsertIntoStatement, DeleteFromTable, UpdateTable,
+# MergeIntoTable, CreateTable[AsSelect] USING dca_manifest,
+# AddCheckConstraint, DropConstraint). Conditions and assignment values
+# go to the handle API as Columns over the parsed expressions; a query or
+# MERGE source runs as a DataFrame over its parsed plan. Text the parser
+# rejects raises ValueError carrying Spark's message. Only the three
+# statements Spark has no grammar for — DESCRIBE HISTORY (which Spark
+# reads as DESCRIBE <table> <column>), OPTIMIZE and VACUUM — are matched
+# by keyword, and ``VERSION/TIMESTAMP AS OF`` on a registered name is a
+# text rewrite before pass-through (_rewrite_time_travel).
 
 _DML_REGISTRY: dict[str, "ManifestTable"] = {}
 _DML_LOCK = _threading.Lock()
@@ -2763,248 +2778,139 @@ _VACUUM_RE = re.compile(
 _TIME_TRAVEL_RE = re.compile(
     rf"\b(?P<name>{_IDENT})\s+(?P<kind>VERSION|TIMESTAMP)\s+AS\s+OF\s+"
     r"(?P<val>'[^']*'|\d+)", re.I)
-_ALTER_CONSTRAINT_RE = re.compile(
-    rf"^\s*ALTER\s+TABLE\s+(?P<name>{_IDENT})\s+"
-    r"(?:ADD\s+CONSTRAINT\s+(?P<cname>\w+)\s+CHECK\s*\((?P<expr>.+)\)"
-    r"|DROP\s+CONSTRAINT\s+(?:(?P<ifex>IF\s+EXISTS)\s+)?(?P<dname>\w+))"
-    r"\s*;?\s*$",
-    re.I | re.S,
-)
-_CREATE_TABLE_RE = re.compile(
-    rf"^\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>{_IDENT})\s+"
-    r"USING\s+dca_manifest\s*"
-    r"(?:OPTIONS\s*\((?P<opts>[^)]*)\)\s*)?"
-    r"(?:LOCATION\s+'(?P<loc>[^']+)'\s*)?"
-    r"(?:AS\s+(?P<query>(?:SELECT|VALUES|WITH|TABLE|FROM)\b.*))?$",
-    re.I | re.S,
-)
-_INSERT_RE = re.compile(
-    rf"^\s*INSERT\s+(?P<mode>INTO|OVERWRITE)\s+(?:TABLE\s+)?"
-    rf"(?P<name>{_IDENT})\s*"
-    r"(?:\((?P<cols>[^)]*)\)\s*)?"
-    r"(?P<query>(?:SELECT|VALUES|WITH|TABLE|FROM)\b.*)$",
-    re.I | re.S,
-)
-_DELETE_RE = re.compile(
-    rf"^\s*DELETE\s+FROM\s+(?P<name>{_IDENT})\s*"
-    r"(?:WHERE\s+(?P<pred>.+?))?\s*;?\s*$",
-    re.I | re.S,
-)
-_UPDATE_RE = re.compile(
-    rf"^\s*UPDATE\s+(?P<name>{_IDENT})\s+SET\s+(?P<sets>.+?)"
-    r"(?:\s+WHERE\s+(?P<pred>.+?))?\s*;?\s*$",
-    re.I | re.S,
-)
-_MERGE_HEAD_RE = re.compile(
-    rf"^\s*MERGE\s+INTO\s+(?P<name>{_IDENT})(?:\s+(?:AS\s+)?(?P<talias>{_IDENT}))?"
-    rf"\s+USING\s+(?P<src>\((?:[^()]|\([^()]*\))*\)|{_IDENT})"
-    rf"(?:\s+(?:AS\s+)?(?P<salias>{_IDENT}))?"
-    r"\s+ON\s+(?P<rest>.+)$",
-    re.I | re.S,
-)
-_WHEN_KIND_RE = re.compile(
-    r"^WHEN\s+(?P<kind>NOT\s+MATCHED\s+BY\s+SOURCE|"
-    r"NOT\s+MATCHED(?:\s+BY\s+TARGET)?|MATCHED)\s+(?P<rest>.+)$",
-    re.I | re.S,
-)
-_UPDATE_ACTION_RE = re.compile(r"^UPDATE\s+SET\s+(?P<sets>.+)$", re.I | re.S)
-_INSERT_STAR_RE = re.compile(r"^INSERT\s*\*$", re.I)
-_INSERT_VALUES_RE = re.compile(
-    r"^INSERT\s*\((?P<cols>[^)]*)\)\s*VALUES\s*\((?P<vals>.+)\)$",
-    re.I | re.S,
-)
 
 
-_WHEN_BOUNDARY_RE = re.compile(r"\bWHEN\s+(?:NOT\s+)?MATCHED\b", re.I)
-_CASE_KW_RE = re.compile(r"\bCASE\b", re.I)
-_END_KW_RE = re.compile(r"\bEND\b", re.I)
+def _kind(node) -> str:
+    """Class name of a parsed (JVM) plan or expression node."""
+    return node.getClass().getSimpleName()
 
 
-def _top_level_scan(text: str, pat: re.Pattern, first: bool = False):
-    """Indices where ``pat`` matches at TOP level: outside string/backtick
-    literals, outside parens/brackets, and outside ``CASE ... END``
-    expressions (a SQL condition or SET expression may contain nested
-    WHEN/THEN only inside a CASE or a parenthesized subexpression — both
-    are skipped here, so MERGE clause keywords are unambiguous)."""
-    hits, depth, case_depth, quote, i = [], 0, 0, None, 0
-    while i < len(text):
-        ch = text[i]
-        if quote:
-            if ch == quote:
-                quote = None
-            i += 1
-            continue
-        if ch in "'\"`":
-            quote = ch
-        elif ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0:
-            m = _CASE_KW_RE.match(text, i)
-            if m:
-                case_depth += 1
-                i = m.end()
-                continue
-            if case_depth > 0:
-                m = _END_KW_RE.match(text, i)
-                if m:
-                    case_depth -= 1
-                    i = m.end()
-                    continue
-            else:
-                m = pat.match(text, i)
-                if m:
-                    hits.append(i)
-                    if first:
-                        return hits
-                    i = m.end()
-                    continue
-        i += 1
-    return hits
+def _seq(seq) -> list:
+    """A Scala Seq from the parsed plan as a Python list."""
+    return [seq.apply(i) for i in range(seq.size())]
 
 
-def _split_merge_tail(rest: str) -> tuple[str, list[str]]:
-    """Split the text after ``ON`` into (on_condition, when_clauses) at
-    top-level ``WHEN [NOT] MATCHED`` boundaries (see _top_level_scan)."""
-    bounds = _top_level_scan(rest, _WHEN_BOUNDARY_RE)
-    if not bounds:
+def _column(spark: SparkSession, expr) -> Column:
+    """A parsed expression as a Column — the same unresolved tree
+    ``F.expr`` builds from its text, so lambdas and subqueries carry over
+    with no render-and-reparse step."""
+    return Column(
+        spark._jvm.org.apache.spark.sql.classic.ExpressionUtils.column(expr))
+
+
+def _opt_column(spark: SparkSession, opt) -> Column | None:
+    """An optional parsed expression as a Column (None when absent)."""
+    return _column(spark, opt.get()) if opt.isDefined() else None
+
+
+def _col_name(attr) -> str:
+    """Column an (optionally qualified) attribute names: ``t.v`` -> v."""
+    return attr.nameParts().last()
+
+
+def _relation_name(node) -> list[str]:
+    """Name parts of the table a statement writes. The relation sits
+    under its alias (MERGE INTO t AS x) or, for ADD CONSTRAINT CHECK,
+    under the Filter Spark builds to validate existing rows."""
+    while _kind(node) in ("SubqueryAlias", "Filter"):
+        node = node.child()
+    return _seq(node.multipartIdentifier())
+
+
+# Spark reserves the table property `table_type` and rejects it in
+# OPTIONS, but it is also the manifest's own cow/mor option: _parse
+# renames that one key inside the OPTIONS list and _sql_create maps it
+# back.
+_TABLE_TYPE_OPTION = "manifest_table_type"
+
+
+def _parse(spark: SparkSession, text: str):
+    """Spark's parse of ``text``: an unresolved logical plan. Text the
+    parser rejects raises ValueError chained to the ParseException."""
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    try:
+        try:
+            return parser.parsePlan(text)
+        except ParseException as exc:
+            if exc.getCondition() != "UNSUPPORTED_FEATURE.SET_TABLE_PROPERTY":
+                raise
+            return parser.parsePlan(re.sub(
+                r"(\bOPTIONS\s*\([^)]*?)\btable_type\b",
+                rf"\1{_TABLE_TYPE_OPTION}", text, count=1, flags=re.I))
+    except ParseException as exc:
         raise ValueError(
-            "MERGE needs at least one WHEN [NOT] MATCHED clause")
-    on_cond = rest[: bounds[0]].strip()
-    clauses = [
-        rest[b: e].strip()
-        for b, e in zip(bounds, bounds[1:] + [len(rest)])
-    ]
-    return on_cond, clauses
+            f"manifest_sql cannot parse the statement: {str(exc).strip()}"
+        ) from exc
 
 
-class _MergeClause:
-    """One parsed WHEN clause: kind in {'matched', 'not_matched',
+def _frame(spark: SparkSession, plan) -> DataFrame:
+    """A parsed query plan (INSERT/CTAS body, MERGE source) as a
+    DataFrame, analysed exactly as ``spark.sql`` would analyse it."""
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, plan)
+    return DataFrame(jdf, spark)
+
+
+def _affected(spark: SparkSession, n: int,
+              col: str = "num_affected_rows") -> DataFrame:
+    return spark.createDataFrame([(n,)], f"{col} bigint")
+
+
+class _MergeClause(NamedTuple):
+    """One WHEN clause: kind in {'matched', 'not_matched',
     'not_matched_by_source'}; action in {'update', 'delete', 'insert'};
-    cond is the optional AND predicate text; sets is {col: expr} for
-    update ('*' sentinel resolved by the executor); insert_cols/vals for
-    the INSERT (cols) VALUES (exprs) form (None = INSERT *)."""
+    cond is the optional AND predicate; sets is {column: value} for
+    UPDATE SET / INSERT (cols) VALUES, None for the ``*`` forms."""
 
-    def __init__(self, kind: str, cond: str | None, action: str,
-                 sets: dict | None = None,
-                 insert_cols: list | None = None,
-                 insert_vals: list | None = None,
-                 star: bool = False):
-        self.kind = kind
-        self.cond = cond
-        self.action = action
-        self.sets = sets
-        self.insert_cols = insert_cols
-        self.insert_vals = insert_vals
-        self.star = star
+    kind: str
+    cond: Column | None
+    action: str
+    sets: dict[str, Column] | None = None
 
 
-_THEN_KW_RE = re.compile(r"\bTHEN\b", re.I)
+_MERGE_ACTIONS = {
+    "UpdateAction": "update", "UpdateStarAction": "update",
+    "InsertAction": "insert", "InsertStarAction": "insert",
+    "DeleteAction": "delete",
+}
 
 
-def _parse_merge_clause(text: str) -> _MergeClause:
-    m = _WHEN_KIND_RE.match(text)
-    if not m:
-        raise ValueError(f"unparseable MERGE clause: {text!r}")
-    kind_raw = re.sub(r"\s+", " ", m.group("kind").upper())
-    kind = {
-        "MATCHED": "matched",
-        "NOT MATCHED": "not_matched",
-        "NOT MATCHED BY TARGET": "not_matched",
-        "NOT MATCHED BY SOURCE": "not_matched_by_source",
-    }[kind_raw]
-    rest = m.group("rest")
-    # the clause's THEN is the first TOP-LEVEL one — a THEN inside a
-    # CASE WHEN (or parens) in the AND-condition never terminates it
-    hit = _top_level_scan(rest, _THEN_KW_RE, first=True)
-    if not hit:
-        raise ValueError(f"MERGE clause missing THEN: {text!r}")
-    before = rest[: hit[0]].strip()
-    action = rest[hit[0] + 4:].strip()
-    cond = None
-    if before:
-        am = re.match(r"^AND\s+(?P<c>.+)$", before, re.I | re.S)
-        if not am:
-            raise ValueError(
-                f"expected AND <condition> before THEN, got: {before!r}")
-        cond = am.group("c").strip()
-    if re.match(r"^DELETE\s*$", action, re.I):
-        if kind == "not_matched":
-            raise ValueError(
-                "WHEN NOT MATCHED supports INSERT only (DELETE targets "
-                "an existing row)")
-        return _MergeClause(kind, cond, "delete")
-    um = _UPDATE_ACTION_RE.match(action)
-    if um:
-        if kind == "not_matched":
-            raise ValueError(
-                "WHEN NOT MATCHED supports INSERT only (UPDATE targets "
-                "an existing row)")
-        sets_text = um.group("sets").strip().rstrip(";").strip()
-        if sets_text == "*":
-            if kind == "not_matched_by_source":
-                raise ValueError(
-                    "UPDATE SET * needs source columns; NOT MATCHED BY "
-                    "SOURCE rows have none")
-            return _MergeClause(kind, cond, "update", star=True)
-        sets = {}
-        for part in _split_top_level(sets_text):
-            am = re.match(
-                rf"^\s*(?:(?:{_IDENT})\s*\.\s*)?(?P<col>{_IDENT})\s*=\s*"
-                r"(?P<expr>.+)$", part, re.S)
-            if not am:
-                raise ValueError(f"unparseable SET assignment: {part!r}")
-            sets[am.group("col").strip("`").lower()] = am.group(
-                "expr").strip()
-        return _MergeClause(kind, cond, "update", sets=sets)
-    if kind != "not_matched":
-        raise ValueError(
-            f"WHEN {kind_raw} supports UPDATE SET/DELETE, got: {action!r}")
-    if _INSERT_STAR_RE.match(action.rstrip(";").strip()):
-        return _MergeClause(kind, cond, "insert", star=True)
-    im = _INSERT_VALUES_RE.match(action.rstrip(";").strip())
-    if im:
-        cols = [c.strip().strip("`").lower()
-                for c in _split_top_level(im.group("cols"))]
-        vals = _split_top_level(im.group("vals"))
-        if len(cols) != len(vals):
-            raise ValueError(
-                f"INSERT column list has {len(cols)} names but VALUES "
-                f"has {len(vals)} expressions")
-        return _MergeClause(kind, cond, "insert",
-                            insert_cols=cols, insert_vals=vals)
-    raise ValueError(
-        f"WHEN NOT MATCHED supports INSERT * or INSERT (cols) VALUES "
-        f"(exprs), got: {action!r}")
+def _merge_clauses(spark: SparkSession, plan) -> list[_MergeClause]:
+    """The WHEN clauses of a parsed MergeIntoTable, in statement order
+    within each kind (the grammar already rejects UPDATE/DELETE under
+    NOT MATCHED, INSERT elsewhere, and mismatched INSERT arity)."""
+    clauses = []
+    for group, kind in (
+        (plan.matchedActions(), "matched"),
+        (plan.notMatchedActions(), "not_matched"),
+        (plan.notMatchedBySourceActions(), "not_matched_by_source"),
+    ):
+        for act in _seq(group):
+            name = _kind(act)
+            sets = None
+            if name in ("UpdateAction", "InsertAction"):
+                sets = {_col_name(a.key()).lower(): _column(spark, a.value())
+                        for a in _seq(act.assignments())}
+            clauses.append(_MergeClause(
+                kind, _opt_column(spark, act.condition()),
+                _MERGE_ACTIONS[name], sets))
+    return clauses
 
 
-def _split_top_level(text: str) -> list[str]:
-    """Split on commas not nested in parens/brackets/quotes (SET a=f(x,y))."""
-    parts, depth, buf, quote = [], 0, [], None
-    for ch in text:
-        if quote:
-            buf.append(ch)
-            if ch == quote:
-                quote = None
-            continue
-        if ch in "'\"`":
-            quote = ch
-            buf.append(ch)
-        elif ch in "([":
-            depth += 1
-            buf.append(ch)
-        elif ch in ")]":
-            depth -= 1
-            buf.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-    if buf:
-        parts.append("".join(buf).strip())
-    return parts
+def _on_keys(cond) -> set[str] | None:
+    """Columns a MERGE ON condition equates when it is only an AND of
+    same-named column equalities (``t.k1 = s.k1 AND t.k2 = s.k2``);
+    None for any other condition."""
+    kind = _kind(cond)
+    if kind == "And":
+        left, right = _on_keys(cond.left()), _on_keys(cond.right())
+        return None if left is None or right is None else left | right
+    if (kind == "EqualTo"
+            and _kind(cond.left()) == "UnresolvedAttribute"
+            and _kind(cond.right()) == "UnresolvedAttribute"):
+        a = _col_name(cond.left()).lower()
+        return {a} if a == _col_name(cond.right()).lower() else None
+    return None
 
 
 def _merge_general(
@@ -3012,7 +2918,7 @@ def _merge_general(
     source_df: DataFrame,
     talias: str,
     salias: str,
-    on_cond: str,
+    cond: Column,
     clauses: list[_MergeClause],
 ) -> int:
     """General MERGE executor (Delta-parity semantics): matched pairs by
@@ -3050,7 +2956,7 @@ def _merge_general(
     src_lower = {c.lower() for c in source_df.columns}
     for c in clauses:
         if c.action == "update":
-            if c.star:
+            if c.sets is None:
                 missing = [
                     f.name for f in fields
                     if f.name.lower() not in src_lower
@@ -3078,7 +2984,7 @@ def _merge_general(
                     f"MERGE SET column(s) {unknown} not in table schema "
                     f"{tcols}")
         elif c.action == "insert":
-            if c.star:
+            if c.sets is None:
                 missing = [f.name for f in fields
                            if f.name.lower() not in src_lower]
                 if missing:
@@ -3086,12 +2992,12 @@ def _merge_general(
                         f"MERGE INSERT * needs every table column in the "
                         f"source; missing {missing}")
                 continue
-            unknown = sorted(set(c.insert_cols) - set(by_lower))
+            unknown = sorted(set(c.sets) - set(by_lower))
             if unknown:
                 raise ValueError(
                     f"MERGE INSERT column(s) {unknown} not in table "
                     f"schema {tcols}")
-            nokey = sorted(key_set - set(c.insert_cols))
+            nokey = sorted(key_set - set(c.sets))
             if nokey:
                 raise ValueError(
                     f"MERGE INSERT must supply the record key column(s); "
@@ -3099,13 +3005,12 @@ def _merge_general(
 
     source_df = _pin(source_df)
     src = source_df.alias(salias)
-    cond = F.expr(on_cond)
     _ACT = "__dca_merge_act"
 
     def _act_col(group: list[_MergeClause]):
         expr = None
         for i, c in enumerate(group):
-            cnd = F.expr(c.cond) if c.cond else F.lit(True)
+            cnd = c.cond if c.cond is not None else F.lit(True)
             expr = (F.when(cnd, F.lit(i)) if expr is None
                     else expr.when(cnd, F.lit(i)))
         return expr.otherwise(F.lit(-1))
@@ -3113,22 +3018,20 @@ def _merge_general(
     def _value_expr(c: _MergeClause, f, has_target: bool) -> Column:
         """The value clause ``c`` writes into field ``f``."""
         if c.action == "insert":
-            if c.star:
+            if c.sets is None:
                 return F.col(f"{salias}.`{f.name}`")
-            vals = dict(zip(c.insert_cols, c.insert_vals))
-            return (F.expr(vals[f.name.lower()])
-                    if f.name.lower() in vals else F.lit(None))
+            return c.sets.get(f.name.lower(), F.lit(None))
         # UPDATE: SET * assigns every NON-key, NON-partition column from
         # the source; keys/partitions always come from the target (an
         # update is a same-key upsert — rewriting the key would orphan
         # the target row, which is why explicit SET on keys errors too)
-        sets = (c.sets if not c.star
-                else {f.name.lower(): f"{salias}.`{f.name}`"
+        sets = (c.sets if c.sets is not None
+                else {f.name.lower(): F.col(f"{salias}.`{f.name}`")
                       for f in fields
                       if f.name.lower() not in key_set
                       and f.name.lower() not in part_set})
         if f.name.lower() in sets:
-            return F.expr(sets[f.name.lower()])
+            return sets[f.name.lower()]
         return (F.col(f"{talias}.`{f.name}`") if has_target
                 else F.lit(None))
 
@@ -3235,7 +3138,7 @@ def _align_to_table(table: "ManifestTable", df: DataFrame,
             for i, f in enumerate(fields)
         ])
     names = {f.name.lower(): f for f in fields}
-    want = [c.strip().strip("`") for c in cols]
+    want = list(cols)
     unknown = [c for c in want if c.lower() not in names]
     if unknown:
         raise ValueError(
@@ -3291,6 +3194,183 @@ def _rewrite_time_travel(
     return _TIME_TRAVEL_RE.sub(_sub, text), drops
 
 
+def _sql_insert(spark: SparkSession, plan, table: "ManifestTable"
+                ) -> DataFrame:
+    if plan.partitionSpec().nonEmpty() or plan.byName():
+        raise ValueError(
+            "INSERT ... PARTITION (...) / BY NAME is not supported on a "
+            "ManifestTable — name the columns: INSERT INTO t (c1, c2) ...")
+    cols = _seq(plan.userSpecifiedCols()) or None
+    batch = _pin(_align_to_table(table, _frame(spark, plan.query()), cols))
+    n = batch.count()
+    if plan.overwrite():
+        # full-content replacement as ONE atomic commit with real
+        # delete capture (write_txn: delete every current key, land
+        # the new rows) — never a bare directory swap, so CDC and
+        # replica consumers see the overwrite as ordinary changes
+        table.write_txn(upserts=batch, deletes=table.read())
+    else:
+        table.write(batch, "insert")
+    return _affected(spark, n)
+
+
+def _sql_delete(spark: SparkSession, plan, table: "ManifestTable"
+                ) -> DataFrame:
+    # a bare DELETE FROM t parses with the literal condition `true`
+    return _affected(
+        spark, table.delete_where(_column(spark, plan.condition())))
+
+
+def _sql_update(spark: SparkSession, plan, table: "ManifestTable"
+                ) -> DataFrame:
+    sets = {_col_name(a.key()): _column(spark, a.value())
+            for a in _seq(plan.assignments())}
+    pred = _opt_column(spark, plan.condition())
+    if pred is None:
+        pred = F.lit(True)
+    return _affected(spark, table.update_where(pred, sets))
+
+
+def _sql_merge(spark: SparkSession, plan, table: "ManifestTable"
+               ) -> DataFrame:
+    target, source = plan.targetTable(), plan.sourceTable()
+    talias = (target.alias() if _kind(target) == "SubqueryAlias"
+              else _relation_name(target)[-1])
+    if _kind(source) == "SubqueryAlias":
+        salias = source.alias()
+    elif _kind(source) == "UnresolvedRelation":
+        salias = _seq(source.multipartIdentifier())[-1]
+    else:
+        salias = "__merge_src"
+    source_df = _frame(spark, source)
+    clauses = _merge_clauses(spark, plan)
+    # Fast path — the canonical upsert MERGE (unconditional UPDATE
+    # SET * + INSERT *, ON equates exactly the record keys): the
+    # source IS the upsert batch, so write() it directly with NO
+    # target scan at all — the O(batch) plan a streaming upsert
+    # needs; the general executor below would join the full table.
+    if (sorted((c.kind, c.action) for c in clauses)
+            == [("matched", "update"), ("not_matched", "insert")]
+            and all(c.cond is None and c.sets is None for c in clauses)
+            and _on_keys(plan.mergeCondition())
+            == {k.lower() for k in table.keys}):
+        fields = table.read().schema.fields
+        have = {c.lower() for c in source_df.columns}
+        missing = [f.name for f in fields if f.name.lower() not in have]
+        if missing:
+            raise ValueError(
+                f"MERGE source lacks table column(s) {missing} "
+                "(UPDATE SET * / INSERT * need every column)"
+            )
+        batch = _pin(source_df.select(*[
+            F.col(f.name).cast(f.dataType).alias(f.name) for f in fields
+        ]))
+        n = batch.count()
+        table.write(batch, "upsert")
+        return _affected(spark, n)
+    n = _merge_general(table, source_df, talias, salias,
+                       _column(spark, plan.mergeCondition()), clauses)
+    return _affected(spark, n)
+
+
+def _sql_add_constraint(spark: SparkSession, plan, table: "ManifestTable"
+                        ) -> DataFrame:
+    # condition() is the user's CHECK text verbatim, so the persisted
+    # _constraints.json holds exactly what was written
+    check = plan.checkConstraint()
+    table.add_constraint(check.name(), check.condition())
+    return _affected(spark, 0)
+
+
+def _sql_drop_constraint(spark: SparkSession, plan, table: "ManifestTable"
+                         ) -> DataFrame:
+    table.drop_constraint(plan.name(), if_exists=plan.ifExists())
+    return _affected(spark, 0)
+
+
+# parsed plan class -> (the node naming the written table, handler)
+_SQL_DML = {
+    "InsertIntoStatement": (lambda p: p.table(), _sql_insert),
+    "DeleteFromTable": (lambda p: p.table(), _sql_delete),
+    "UpdateTable": (lambda p: p.table(), _sql_update),
+    "MergeIntoTable": (lambda p: p.targetTable(), _sql_merge),
+    "AddCheckConstraint": (lambda p: p.child(), _sql_add_constraint),
+    "DropConstraint": (lambda p: p.table(), _sql_drop_constraint),
+}
+
+_CREATE_OPTIONS = {"keys", "precombine", "partition_by", "table_type",
+                   "cluster_by", "cluster_method"}
+
+
+def _sql_create(spark: SparkSession, plan, name: str) -> DataFrame:
+    """CREATE TABLE name USING dca_manifest [OPTIONS] [LOCATION] AS q."""
+    with _DML_LOCK:
+        exists = name.lower() in _DML_REGISTRY
+    if exists:
+        if plan.ignoreIfExists():
+            return _affected(spark, 0)
+        raise ValueError(
+            f"table {name!r} is already registered — use CREATE TABLE "
+            "IF NOT EXISTS, or a different name")
+    if _kind(plan) == "CreateTable":
+        raise ValueError(
+            "CREATE TABLE ... USING dca_manifest requires AS <query> "
+            "— the committed schema comes from the first commit "
+            "(CTAS); to attach an EXISTING table directory, build a "
+            "ManifestTable handle and register() it")
+    if plan.partitioning().nonEmpty():
+        raise ValueError(
+            "CREATE TABLE ... USING dca_manifest takes its partition "
+            "columns as OPTIONS (partition_by='c1[,c2]'), not "
+            "PARTITIONED BY")
+    spec = plan.tableSpec()
+    opts = {kv._1().lower(): kv._2().toString()
+            for kv in _seq(spec.optionExpression().options())}
+    if _TABLE_TYPE_OPTION in opts:
+        opts["table_type"] = opts.pop(_TABLE_TYPE_OPTION)
+    unknown = sorted(set(opts) - _CREATE_OPTIONS)
+    if unknown:
+        raise ValueError(
+            f"unknown OPTIONS key(s) {unknown}; supported: "
+            f"{sorted(_CREATE_OPTIONS)}")
+    if "keys" not in opts:
+        raise ValueError(
+            "CREATE TABLE ... USING dca_manifest needs OPTIONS "
+            "(keys='k1[,k2]') — every lake table is keyed")
+
+    def _csv(s: str) -> tuple[str, ...]:
+        return tuple(x.strip() for x in s.split(",") if x.strip())
+
+    if spec.location().isDefined():
+        loc = spec.location().get()
+    else:
+        # managed table: directory under the session warehouse,
+        # Delta's CREATE-without-LOCATION behavior
+        wh = re.sub(r"^file:/{0,2}(?=/)", "",
+                    spark.conf.get("spark.sql.warehouse.dir"))
+        loc = str(Path(wh) / name)
+    if (Path(loc) / _MANIFEST_DIR).is_dir():
+        raise ValueError(
+            f"{loc!r} already contains a ManifestTable — attach it "
+            "with ManifestTable(spark, path, ...).register(name) "
+            "instead of CREATE TABLE")
+    keys = _csv(opts["keys"])
+    table = ManifestTable(
+        spark, loc,
+        keys=keys,
+        precombine=opts.get("precombine", keys[0]),
+        partition_by=_csv(opts.get("partition_by", "")),
+        cluster_by=_csv(opts.get("cluster_by", "")),
+        cluster_method=opts.get("cluster_method", "linear"),
+        table_type=opts.get("table_type", "cow"),
+    )
+    df = _pin(_frame(spark, plan.query()))
+    n = df.count()
+    table.write(df, "bulk_insert")
+    table.register(name)
+    return _affected(spark, n)
+
+
 def manifest_sql(spark: SparkSession, text: str) -> DataFrame:
     """SQL entry point with lakehouse DML: INSERT INTO / DELETE FROM /
     UPDATE / MERGE INTO statements naming a ``register()``-ed
@@ -3301,6 +3381,16 @@ def manifest_sql(spark: SparkSession, text: str) -> DataFrame:
     ``spark.sql`` unchanged. See the module note above for WHY this
     front-end exists (Spark cannot yet route SQL writes to a Python data
     source table).
+
+    The grammar is Spark's own SQL parser: the text is parsed once and
+    dispatched on the plan it yields, so comments, nested subqueries,
+    quoted names and string literals that contain SQL keywords route
+    exactly as Spark reads them. Text the parser rejects raises
+    ``ValueError`` chained to Spark's ``ParseException`` (whose message,
+    e.g. ``MERGE_WITHOUT_WHEN``, it carries). A statement is routed only
+    when it names a single-part registered name: an unregistered name
+    raises "not a registered ManifestTable"; a multi-part name and any
+    non-DML statement pass through to ``spark.sql``.
 
     Supported DML, mapped to the Athena/Hudi write surface the reference
     drives through Glue jobs (glue/scripts/load_transactions.py:117-122
@@ -3315,7 +3405,7 @@ def manifest_sql(spark: SparkSession, text: str) -> DataFrame:
     - ``UPDATE name SET c = expr, ... [WHERE pred]`` ->
       ``update_where(pred, assignments)``
     - ``MERGE INTO name [AS t] USING src [AS s] ON <cond> WHEN ...``:
-      the full Delta-parity grammar — any number of ``WHEN MATCHED
+      Spark's full MERGE grammar — any number of ``WHEN MATCHED
       [AND c] THEN UPDATE SET a=expr,.../UPDATE SET */DELETE``, ``WHEN
       NOT MATCHED [BY TARGET] [AND c] THEN INSERT */(cols) VALUES
       (exprs)`` and ``WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE
@@ -3341,6 +3431,10 @@ def manifest_sql(spark: SparkSession, text: str) -> DataFrame:
       (``_constraints.json`` sidecar): existing rows are validated on
       ADD, and every writer of the table — any handle, the streaming
       sink path excepted, SQL DML — enforces them from its next write
+
+    Spark's parser has no grammar for the next three, so they alone are
+    matched by keyword before parsing:
+
     - ``DESCRIBE HISTORY name`` -> ``history()`` (one row per retained
       commit: op kind + file/change-capture counts)
     - ``OPTIMIZE name [ZORDER BY (c1, c2)]`` -> ``compact()``, with the
@@ -3353,92 +3447,14 @@ def manifest_sql(spark: SparkSession, text: str) -> DataFrame:
 
     Time travel in pass-through reads: ``FROM name VERSION AS OF n`` /
     ``name TIMESTAMP AS OF '2024-01-01 12:00:00'`` on a registered name
-    resolves against that pinned snapshot (see _rewrite_time_travel).
+    is a text rewrite to a temp view pinned at that snapshot before the
+    text goes to ``spark.sql`` (see _rewrite_time_travel).
 
     DML returns a 1-row ``num_affected_rows`` frame (Delta's contract);
     INSERT counts the appended batch. The DML registry is
     process-scoped: a fresh process must re-``register()`` handles
     before writing by name (reads need no handle — the VIEW is durable).
     """
-    m = _CREATE_TABLE_RE.match(text)
-    if m:
-        name = m.group("name").strip("`")
-        with _DML_LOCK:
-            exists = name.lower() in _DML_REGISTRY
-        if exists:
-            if re.match(r"^\s*CREATE\s+TABLE\s+IF\s+NOT\s+EXISTS", text,
-                        re.I):
-                return spark.createDataFrame(
-                    [(0,)], "num_affected_rows bigint")
-            raise ValueError(
-                f"table {name!r} is already registered — use CREATE TABLE "
-                "IF NOT EXISTS, or a different name")
-        if not m.group("query"):
-            raise ValueError(
-                "CREATE TABLE ... USING dca_manifest requires AS <query> "
-                "— the committed schema comes from the first commit "
-                "(CTAS); to attach an EXISTING table directory, build a "
-                "ManifestTable handle and register() it")
-        opts: dict[str, str] = {}
-        for part in _split_top_level(m.group("opts") or ""):
-            km = re.match(
-                r"^\s*(?P<k>[\w.]+)\s*=\s*'(?P<v>[^']*)'\s*$", part)
-            if not km:
-                raise ValueError(
-                    f"unparseable OPTIONS entry {part!r} (expected "
-                    "key='value')")
-            opts[km.group("k").lower()] = km.group("v")
-        allowed = {"keys", "precombine", "partition_by", "table_type",
-                   "cluster_by", "cluster_method"}
-        unknown = sorted(set(opts) - allowed)
-        if unknown:
-            raise ValueError(
-                f"unknown OPTIONS key(s) {unknown}; supported: "
-                f"{sorted(allowed)}")
-        if "keys" not in opts:
-            raise ValueError(
-                "CREATE TABLE ... USING dca_manifest needs OPTIONS "
-                "(keys='k1[,k2]') — every lake table is keyed")
-
-        def _csv(s: str) -> tuple[str, ...]:
-            return tuple(x.strip() for x in s.split(",") if x.strip())
-
-        loc = m.group("loc")
-        if not loc:
-            # managed table: directory under the session warehouse,
-            # Delta's CREATE-without-LOCATION behavior
-            wh = re.sub(r"^file:/{0,2}(?=/)", "",
-                        spark.conf.get("spark.sql.warehouse.dir"))
-            loc = str(Path(wh) / name)
-        if (Path(loc) / _MANIFEST_DIR).is_dir():
-            raise ValueError(
-                f"{loc!r} already contains a ManifestTable — attach it "
-                "with ManifestTable(spark, path, ...).register(name) "
-                "instead of CREATE TABLE")
-        keys = _csv(opts["keys"])
-        table = ManifestTable(
-            spark, loc,
-            keys=keys,
-            precombine=opts.get("precombine", keys[0]),
-            partition_by=_csv(opts.get("partition_by", "")),
-            cluster_by=_csv(opts.get("cluster_by", "")),
-            cluster_method=opts.get("cluster_method", "linear"),
-            table_type=opts.get("table_type", "cow"),
-        )
-        df = _pin(spark.sql(m.group("query")))
-        n = df.count()
-        table.write(df, "bulk_insert")
-        table.register(name)
-        return spark.createDataFrame([(n,)], "num_affected_rows bigint")
-    m = _ALTER_CONSTRAINT_RE.match(text)
-    if m:
-        table = _dml_table(m.group("name"))
-        if m.group("cname"):
-            table.add_constraint(m.group("cname"), m.group("expr").strip())
-        else:
-            table.drop_constraint(
-                m.group("dname"), if_exists=bool(m.group("ifex")))
-        return spark.createDataFrame([(0,)], "num_affected_rows bigint")
     m = _DESCRIBE_HISTORY_RE.match(text)
     if m:
         return _dml_table(m.group("name")).history()
@@ -3446,8 +3462,7 @@ def manifest_sql(spark: SparkSession, text: str) -> DataFrame:
     if m:
         table = _dml_table(m.group("name"))
         if m.group("cols"):
-            cols = [c.strip().strip("`")
-                    for c in _split_top_level(m.group("cols"))]
+            cols = [c.strip().strip("`") for c in m.group("cols").split(",")]
             # ZORDER BY applies to THIS optimize only (Delta's contract):
             # compact() rewrites through the ordinary write path, which
             # consults cluster_by/cluster_method — override, restore
@@ -3459,103 +3474,26 @@ def manifest_sql(spark: SparkSession, text: str) -> DataFrame:
                 table.cluster_by, table.cluster_method = saved
         else:
             n = table.compact()
-        return spark.createDataFrame([(n,)], "num_files_replaced bigint")
+        return _affected(spark, n, "num_files_replaced")
     m = _VACUUM_RE.match(text)
     if m:
         table = _dml_table(m.group("name"))
         n = table.vacuum(
             keep_last=int(m.group("n")) if m.group("n") else 1)
-        return spark.createDataFrame([(n,)], "num_files_removed bigint")
-    m = _INSERT_RE.match(text)
-    if m:
-        table = _dml_table(m.group("name"))
-        src = spark.sql(m.group("query"))
-        cols = _split_top_level(m.group("cols")) if m.group("cols") else None
-        batch = _pin(_align_to_table(table, src, cols))
-        n = batch.count()
-        if m.group("mode").upper() == "OVERWRITE":
-            # full-content replacement as ONE atomic commit with real
-            # delete capture (write_txn: delete every current key, land
-            # the new rows) — never a bare directory swap, so CDC and
-            # replica consumers see the overwrite as ordinary changes
-            table.write_txn(upserts=batch, deletes=table.read())
-        else:
-            table.write(batch, "insert")
-        return spark.createDataFrame([(n,)], "num_affected_rows bigint")
-    m = _DELETE_RE.match(text)
-    if m:
-        table = _dml_table(m.group("name"))
-        n = table.delete_where(m.group("pred") or F.lit(True))
-        return spark.createDataFrame([(n,)], "num_affected_rows bigint")
-    m = _UPDATE_RE.match(text)
-    if m:
-        table = _dml_table(m.group("name"))
-        sets: dict[str, str] = {}
-        for part in _split_top_level(m.group("sets")):
-            col, eq, expr = part.partition("=")
-            if not eq or not col.strip() or not expr.strip():
-                raise ValueError(f"cannot parse UPDATE assignment {part!r}")
-            sets[col.strip().strip("`")] = expr.strip()
-        n = table.update_where(m.group("pred") or F.lit(True), sets)
-        return spark.createDataFrame([(n,)], "num_affected_rows bigint")
-    m = _MERGE_HEAD_RE.match(text)
-    if m:
-        table = _dml_table(m.group("name"))
-        on_cond, clause_texts = _split_merge_tail(m.group("rest"))
-        clauses = [_parse_merge_clause(c) for c in clause_texts]
-        src = m.group("src")
-        source_df = spark.sql(
-            f"SELECT * FROM {src}" if not src.startswith("(")
-            else f"SELECT * FROM {src} AS __merge_src"
-        )
-        talias = (m.group("talias") or m.group("name")).strip("`")
-        salias = (m.group("salias") or
-                  (src.strip("`") if not src.startswith("(")
-                   else "__merge_src"))
-        # Fast path — the canonical upsert MERGE (unconditional UPDATE
-        # SET * + INSERT *, ON equates exactly the record keys): the
-        # source IS the upsert batch, so write() it directly with NO
-        # target scan at all — the O(batch) plan a streaming upsert
-        # needs; the general executor below would join the full table.
-        kinds = sorted(c.kind for c in clauses)
-        if (kinds == ["matched", "not_matched"]
-                and all(c.cond is None and c.star for c in clauses)
-                and {c.action for c in clauses} == {"update", "insert"}):
-            pairs = re.split(r"\s+AND\s+", on_cond.strip(), flags=re.I)
-            on_keys = set()
-            for p in pairs:
-                eq = re.match(
-                    rf"^\s*(?:(?:{_IDENT})\s*\.\s*)?(?P<a>{_IDENT})\s*=\s*"
-                    rf"(?:(?:{_IDENT})\s*\.\s*)?(?P<b>{_IDENT})\s*$",
-                    p,
-                )
-                if (eq and eq.group("a").strip("`").lower()
-                        == eq.group("b").strip("`").lower()):
-                    on_keys.add(eq.group("a").strip("`").lower())
-                else:
-                    on_keys = None
-                    break
-            if on_keys == {k.lower() for k in table.keys}:
-                fields = table.read().schema.fields
-                have = {c.lower() for c in source_df.columns}
-                missing = [f.name for f in fields
-                           if f.name.lower() not in have]
-                if missing:
-                    raise ValueError(
-                        f"MERGE source lacks table column(s) {missing} "
-                        "(UPDATE SET * / INSERT * need every column)"
-                    )
-                batch = _pin(source_df.select(*[
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    for f in fields
-                ]))
-                n = batch.count()
-                table.write(batch, "upsert")
-                return spark.createDataFrame(
-                    [(n,)], "num_affected_rows bigint")
-        n = _merge_general(
-            table, source_df, talias, salias, on_cond, clauses)
-        return spark.createDataFrame([(n,)], "num_affected_rows bigint")
+        return _affected(spark, n, "num_files_removed")
+    plan = _parse(spark, text)
+    kind = _kind(plan)
+    if kind in ("CreateTableAsSelect", "CreateTable"):
+        provider = plan.tableSpec().provider()
+        parts = _seq(plan.name().nameParts())
+        if (len(parts) == 1 and provider.isDefined()
+                and provider.get().lower() == "dca_manifest"):
+            return _sql_create(spark, plan, parts[0])
+    elif kind in _SQL_DML:
+        target, handler = _SQL_DML[kind]
+        parts = _relation_name(target(plan))
+        if len(parts) == 1:
+            return handler(spark, plan, _dml_table(parts[0]))
     rewritten, drops = _rewrite_time_travel(spark, text)
     try:
         # spark.sql resolves the pinned temp views at ANALYSIS time;

@@ -187,11 +187,17 @@ def exploded_shingles(
             F.explode(shingles(F.col(text_col), mode, k)).alias("__g"),
         ).distinct()
     from dca_manager_spark.operators.text import tokens
-    from dca_manager_spark.partitioning import keyed_width
 
+    # An explicit partition count, not a bare repartition(key): that is
+    # REPARTITION_BY_COL, which AQE's coalescer folds down purely by
+    # shuffled bytes — for a stage whose cost is CPU per row (shingle
+    # assembly, per-gram hashing) that collapses the chain onto 1-2
+    # cores whenever the bytes are small. REPARTITION_BY_NUM is exempt
+    # from coalescing.
+    width = df.sparkSession.sparkContext.defaultParallelism
     toked = df.select(
         F.col(id_col).alias("__id"), F.col(text_col).alias("__tx")
-    ).repartition(keyed_width(df), "__id").select(
+    ).repartition(width, "__id").select(
         "__id",
         tokens(F.lower(F.col("__tx"))).alias("__tk"),
     )

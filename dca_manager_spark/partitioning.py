@@ -33,39 +33,3 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
         return df.repartition(want)
     return df
 
-
-# Target bytes per partition for CPU-heavy keyed exchanges — matches
-# AQE's advisoryPartitionSizeInBytes default, so at real scale the
-# explicit count agrees with what the coalescer would have chosen for
-# byte-bound work; the difference is the defaultParallelism FLOOR below.
-_KEYED_TARGET_BYTES = 64 * 1024 * 1024
-
-
-def keyed_width(df: DataFrame) -> int:
-    """Partition count for an explicit ``repartition(n, key)`` feeding a
-    CPU-heavy stage: ``max(defaultParallelism, input_bytes / 64MB)``.
-
-    WHY an explicit count at all: a bare ``repartition(key)`` is
-    REPARTITION_BY_COL, which AQE's coalescer folds down purely by
-    SHUFFLED BYTES — for stages whose cost is CPU per row (shingle
-    assembly, per-gram hashing, codec work) that collapses the whole
-    chain onto 1-2 cores whenever the bytes are small. An explicit
-    count (REPARTITION_BY_NUM) is exempt from coalescing; deriving it
-    from the optimizer's size estimate keeps it scale-adaptive — the
-    cluster width locally / at moderate inputs, byte-proportional (the
-    same sizing AQE itself would pick) once the input outgrows
-    ``64MB x defaultParallelism``.
-
-    Uses the OPTIMIZED logical plan's statistics, not ``df.rdd`` — the
-    latter runs full physical planning + AQE preparation per call,
-    which is exactly the driver-side build cost this helper exists to
-    avoid (measured: ~0.5s per .rdd probe on checkpoint-laden plans).
-    """
-    sc = df.sparkSession.sparkContext
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes().toString()
-        )
-    except Exception:
-        return sc.defaultParallelism
-    return max(sc.defaultParallelism, min(size // _KEYED_TARGET_BYTES, 1 << 20))

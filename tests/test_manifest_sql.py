@@ -899,3 +899,42 @@ def test_manifest_sql_alter_constraint(spark, dml, tmp_path):
     r = manifest_sql(
         spark, "ALTER TABLE dml_t DROP CONSTRAINT IF EXISTS nope")
     assert r.collect()[0].num_affected_rows == 0
+
+
+@pytest.mark.parametrize("text, want", [
+    pytest.param("""
+        MERGE INTO dml_t t
+        USING (SELECT * FROM (SELECT * FROM (
+            SELECT 2 AS id, 20.0 AS v, 'bb' AS s) a) b) s
+        ON t.id = s.id
+        WHEN MATCHED THEN UPDATE SET *
+        WHEN NOT MATCHED THEN INSERT *
+    """, [(1, 1.0, "a"), (2, 20.0, "bb")], id="merge_nested_subquery"),
+    pytest.param("""-- upsert one row
+        MERGE INTO dml_t t USING (SELECT 3 AS id, 3.0 AS v, 'c' AS s) s
+        ON t.id = s.id
+        WHEN MATCHED THEN UPDATE SET *
+        WHEN NOT MATCHED THEN INSERT *
+    """, [(1, 1.0, "a"), (2, 2.0, "b"), (3, 3.0, "c")],
+        id="merge_leading_line_comment"),
+    pytest.param("/* purge */ DELETE FROM dml_t WHERE id = 1",
+                 [(2, 2.0, "b")], id="delete_leading_block_comment"),
+    pytest.param("""
+        MERGE INTO dml_t t USING (SELECT 1 AS id) s ON t.id = s.id
+        WHEN MATCHED THEN UPDATE SET s = 'x, WHEN MATCHED THEN'
+    """, [(1, 1.0, "x, WHEN MATCHED THEN"), (2, 2.0, "b")],
+        id="merge_keywords_in_string_literal"),
+])
+def test_manifest_sql_routes_parser_shapes(spark, dml, text, want):
+    """Shapes that only a real SQL parser routes correctly — a USING
+    subquery nested two levels deep, leading comments, MERGE keywords
+    inside a string literal. Each must commit through the handle (one
+    new history row), not fall through to spark.sql against the VIEW."""
+    from dca_manager_spark.io.manifest import manifest_sql
+
+    before = dml.history().count()
+    manifest_sql(spark, text).collect()
+    assert dml.history().count() == before + 1
+    got = sorted((x.id, x.v, x.s)
+                 for x in spark.sql("SELECT * FROM dml_t").collect())
+    assert got == want
